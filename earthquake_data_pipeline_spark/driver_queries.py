@@ -772,8 +772,8 @@ REGEX_TOKENS = ["vector", "customer", "spark", "window", "stream"]
 
 
 def q_regex_token_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R3/F1 — first-match-wins word-token containment join on documents
-    (broadcast nested-loop crossJoin + RLIKE + priority row_number)."""
+    """R3/F1 — first-match-wins word-token containment on documents
+    (one regex projection per row, operators/enrichment.py::token_priority)."""
     _utc(spark)
     from .operators.enrichment import regex_token_join
 
@@ -863,13 +863,12 @@ GEO_COUNTRY_LOOKUP = [
 
 def q_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's signature pipeline end-to-end (add_region.py:17-66,
-    add_region_chunks.py:18-88): point-in-polygon spatial left join →
-    word-token regex fallback ONLY on spatial misses (first-match-wins in
-    lookup order) → broadcast region lookup for inferred countries →
-    coalesce-fill. Parts are proven separately (spatial_join,
-    regex_token_match, enrich_coalesce); this proves the composition,
-    using event_id as the natural join key (the no-materialization scale
-    path of operators/enrichment.py::enrich_events)."""
+    add_region_chunks.py:18-88): point-in-polygon spatial left join, then
+    the word-token fallback ONLY on spatial misses (first-match-wins in
+    lookup order), with the inferred country's region from the same
+    lookup — one map-only projection, no row id or join back. Parts are
+    proven separately (spatial_join, regex_token_match); this proves the
+    composition of operators/enrichment.py::enrich_events."""
     _utc(spark)
     from .operators.enrichment import enrich_events
 
@@ -879,9 +878,7 @@ def q_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_LAT_EXPR).alias("latitude"),
         F.expr(_PLACE_EXPR).alias("place"),
     )
-    out = enrich_events(
-        ev, GEO_POLYGONS, GEO_COUNTRY_LOOKUP, id_col="event_id"
-    )
+    out = enrich_events(ev, GEO_POLYGONS, GEO_COUNTRY_LOOKUP)
     return out.select(
         "event_id",
         F.col("country").alias("final_country"),

@@ -5,13 +5,12 @@ from .dedup import (
     dedup_row_number,
     exact_dedup,
 )
-from .enrichment import coalesce_fill, enrich_events, regex_token_join, spatial_join
+from .enrichment import enrich_events, regex_token_join, spatial_join
 from .merge import anti_join_merge, high_water_mark_filter, incremental_upsert
 
 __all__ = [
     "anti_join_merge",
     "clean_events",
-    "coalesce_fill",
     "dedup_keep_any",
     "dedup_keep_first",
     "dedup_row_number",

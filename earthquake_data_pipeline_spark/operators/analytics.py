@@ -1478,12 +1478,15 @@ def percentile_moments_by_counts(
     nn = F.when(F.col("v").isNotNull(), F.col("c")).otherwise(F.lit(0))
     # decimal(19,0)·decimal(18,12) → decimal(38,12) EXACT (no precision
     # cap hit), sum stays (38,12): exact while |v| < 1e6 and
-    # Σ|c·v| < 1e26 (bounded-domain envelope; an overflow surfaces as
-    # NULL sd, never a silently-wrong digit). The 12-dp cast bounds the
-    # mean's error at ≤5e-13 absolute, so the two-pass M2 bias n·δ² is
-    # ~1e-25·n — invisible at the 6-dp rounding every consumer applies.
+    # Σ|c·v| < 1e26. Values outside |v| < 1e6 (and NaN/±Inf) never reach
+    # the cast — it would throw under ANSI and turn NULL (silently
+    # skipped by the sum) without it — and instead NULL their key's sd
+    # below, so both modes agree. The 12-dp cast bounds the mean's error
+    # at ≤5e-13 absolute, so the two-pass M2 bias n·δ² is ~1e-25·n —
+    # invisible at the 6-dp rounding every consumer applies.
+    in_domain = F.abs(F.col("v")) < 1e6
     cv = F.col("c").cast("decimal(19,0)") * F.when(
-        F.col("v").isNotNull(), F.col("v")
+        in_domain, F.col("v")
     ).otherwise(F.lit(0.0)).cast("decimal(18,12)")
     w = Window.partitionBy("k").orderBy(F.asc_nulls_first("v"))
     wfull = (
@@ -1511,6 +1514,7 @@ def percentile_moments_by_counts(
     aggs = [
         F.max("n").alias("n"),
         F.sum(F.when(nonnull, F.col("c") * dev * dev)).alias("__m2"),
+        F.bool_and(in_domain | ~nonnull).alias("__in_domain"),
     ]
     outs = []
     for idx, p in enumerate(percentiles):
@@ -1533,7 +1537,8 @@ def percentile_moments_by_counts(
             ).alias(f"p_{idx}")
         )
     sd = F.when(
-        F.col("n") > 1, F.sqrt(F.col("__m2") / (F.col("n") - 1))
+        (F.col("n") > 1) & F.col("__in_domain"),
+        F.sqrt(F.col("__m2") / (F.col("n") - 1)),
     ).alias("sd")
     return (
         h.groupBy("k")

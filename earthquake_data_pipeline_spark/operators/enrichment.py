@@ -8,30 +8,33 @@ The reference enriches events with country/region via three mechanisms
    token in list order wins) — R3/F1;
 3. index-aligned fillna of the spatial result from the fallback — D9/R5.
 
-Spark-first restatement, one lazy plan instead of a 100k-row chunk loop:
+Spark-first restatement: one lazy, map-only plan instead of a 100k-row
+chunk loop — no row id, join, window or shuffle:
 
-- ``spatial_join``       — mapInPandas over the points with the (KB-sized)
+- ``spatial_join``   — mapInPandas over the points with the (KB-sized)
   polygon dim broadcast; numpy ray-casting with bbox prefilter per polygon
-  (functions/geo.py). Embarrassingly parallel, no shuffle, scales linearly.
-- ``regex_token_join``   — broadcast nested-loop join: crossJoin the token
-  dim + RLIKE filter + row_number over token priority → first-match-wins,
-  entirely JVM-side (whole-stage codegen keeps the regex in Java).
-- ``enrich_events``      — the composition, with the subset-before-UDF plan
-  structure the reference hand-codes (fallback applied only where the
-  spatial join missed) and a coalesce instead of pandas index alignment.
+  (functions/geo.py). Embarrassingly parallel, scales linearly.
+- ``token_priority`` — the fallback as one Column: a single literal regex
+  finds every word-token match in a row, and the lowest list index among
+  them wins (first-match-wins), entirely inside the JVM's regex engine.
+  ``regex_token_join`` adds the winning token as a column.
+- ``enrich_events``  — the composition: the fallback runs only where the
+  spatial join missed, and literal maps keyed by priority fill
+  country/region by coalesce — the reference's index-aligned fillna
+  without any row alignment, since every row is filled from itself.
 """
 
 from __future__ import annotations
 
+import re
+import string
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.geo import parse_wkt_polygon, points_in_polygon, ring_bbox
-from ..functions.scalar import token_pattern
-from ..qcommon import reuse
 
 # Linear per-batch polygon scan is fine to ~16× the reference's 259-row
 # world dim; past this the operator switches to the bbox-grid index
@@ -335,6 +338,55 @@ def spatial_join(
     return points.mapInPandas(fn, out_schema)
 
 
+def _lookup(pairs, key: Column) -> Column:
+    """``key`` looked up in a literal map built from (key, value) pairs:
+    NULL for a NULL or absent key. Not ``element_at(array, i)``, which
+    on Spark 4.1 returns the array's LAST element for a NULL index."""
+    pairs = list(pairs)
+    if not pairs:
+        return F.lit(None).cast("string")
+    return F.create_map(*[F.lit(x) for kv in pairs for x in kv])[key]
+
+
+def token_priority(
+    text: "Column | str", tokens: Sequence[str], case_insensitive: bool = True
+) -> Column:
+    r"""R3/F1 — list index of the first token that occurs as a word in
+    ``text`` (reference: add_region.py:40-46), NULL when none does or
+    ``text`` is NULL.
+
+    One literal pattern, ``(?i)(?=\b(tok_0|tok_1|…)\b)`` with each token
+    escaped as ``token_pattern`` does, compiled once per task. The
+    lookahead is zero-width, so ``regexp_extract_all`` tries every start
+    position; at each one, alternation order yields the lowest-index
+    token matching there (the shared leading ``\b`` rejects a position
+    inside a word before any alternative is tried). The minimum index
+    over all positions is the minimum over all (token, position)
+    matches — what a per-token ``rlike(token_pattern(t))`` scan in list
+    order returns, on the same Java engine with the same ``\b``/``(?i)``
+    rules. Each match maps back to its index through a literal map keyed
+    by the matched text, ASCII-folded when case-insensitive (Java's
+    ``(?i)`` folds ASCII only); tokens sharing a key keep the lower
+    index.
+    """
+    if not tokens:
+        return F.lit(None).cast("int")
+    up, low = string.ascii_uppercase, string.ascii_lowercase
+    fold = str.maketrans(up, low) if case_insensitive else {}
+    index: dict[str, int] = {}
+    for i, t in enumerate(tokens):
+        index.setdefault(t.translate(fold), i)
+    flag = "(?i)" if case_insensitive else ""
+    alts = "|".join(re.escape(t) for t in tokens)
+    hits = F.regexp_extract_all(text, F.lit(rf"{flag}(?=\b({alts})\b)"), 1)
+
+    def index_of(m: Column) -> Column:
+        key = F.translate(m, up, low) if case_insensitive else m
+        return _lookup(index.items(), key)
+
+    return F.array_min(F.transform(hits, index_of))
+
+
 def regex_token_join(
     df: DataFrame,
     text_col: str,
@@ -343,57 +395,16 @@ def regex_token_join(
     out_col: str = "matched_token",
     case_insensitive: bool = True,
 ) -> DataFrame:
-    """R3/F1 — first-match-wins token containment join, JVM-side.
+    """R3/F1 — adds ``out_col``: the first token in list order that
+    appears as a word in ``text_col`` (:func:`token_priority`), NULL if
+    none does.
 
-    The reference loops countries per row with early return
-    (pipeline/add_region.py:40-46): the FIRST country (in list order) whose
-    name appears as a word token in ``text_col`` wins. Restated as a
-    broadcast nested-loop join: crossJoin a tiny (idx, token, pattern) dim,
-    keep RLIKE hits, row_number over idx per key → rn=1. The ordering is
-    preserved under parallelism because the priority index travels with the
-    data (SURVEY §7 hard-part 2).
+    Rows are independent: this is one map-only projection, not a join,
+    so ``key_cols`` no longer groups anything and each row gets its own
+    first match. It stays in the signature for existing callers.
     """
-    spark = df.sparkSession
-    flag = "(?i)" if case_insensitive else ""
-    tok_rows = [(i, t, flag + token_pattern(t)) for i, t in enumerate(tokens)]
-    toks = F.broadcast(
-        spark.createDataFrame(tok_rows, ["tok_idx__", "token__", "pattern__"])
-    )
-    hits = (
-        df.select(*key_cols, text_col)
-        .crossJoin(toks)
-        .filter(F.expr(f"`{text_col}` rlike pattern__"))
-    )
-    w = Window.partitionBy(*[F.col(k) for k in key_cols]).orderBy("tok_idx__")
-    first = (
-        hits.withColumn("rn__", F.row_number().over(w))
-        .filter(F.col("rn__") == 1)
-        .select(*key_cols, F.col("token__").alias(out_col))
-    )
-    return df.join(first, on=list(key_cols), how="left")
-
-
-def coalesce_fill(
-    base: DataFrame,
-    patch: DataFrame,
-    key_cols: Sequence[str],
-    fill_cols: Sequence[tuple[str, str]],
-) -> DataFrame:
-    """D9/R5 — fill nulls of ``base`` columns from ``patch`` via key join.
-
-    The reference does this with pandas index alignment
-    (add_region.py:56-61); Spark has no row identity, so the caller
-    supplies explicit keys (materialize monotonically_increasing_id BEFORE
-    splitting if no natural key exists). ``fill_cols`` maps
-    (base_col, patch_col).
-    """
-    patch_cols = [F.col(p).alias(f"__patch_{b}") for b, p in fill_cols]
-    joined = base.join(
-        patch.select(*key_cols, *patch_cols), on=list(key_cols), how="left"
-    )
-    for b, _ in fill_cols:
-        joined = joined.withColumn(b, F.coalesce(F.col(b), F.col(f"__patch_{b}")))
-    return joined.drop(*[f"__patch_{b}" for b, _ in fill_cols])
+    prio = token_priority(text_col, tokens, case_insensitive)
+    return df.withColumn(out_col, _lookup(enumerate(tokens), prio))
 
 
 def enrich_events(
@@ -403,62 +414,43 @@ def enrich_events(
     place_col: str = "place",
     lon_col: str = "longitude",
     lat_col: str = "latitude",
-    id_col: str | None = None,
     case_insensitive: bool = True,
 ) -> DataFrame:
-    """The full enrichment composition (reference: add_region.py:17-66).
+    """The full enrichment composition (reference: add_region.py:17-66):
+    ``spatial_join``, then one projection that fills the spatial misses
+    from the place-name fallback.
 
-    spatial join → regex fallback ONLY on spatial misses (subset-before-
-    expensive-op plan structure, SURVEY §4) → broadcast lookup of region for
-    inferred countries → coalesce-fill. ``country_lookup`` is the
-    (country, region) dim including name-only rows like 'Alaska'.
+    ``country_lookup`` is the (country, region) dim including name-only
+    rows like 'Alaska'; its list order is the fallback's priority order.
+    A name listed more than once counts once, at its first position and
+    with its first region. The fallback regex runs only where the
+    spatial join found no country, and the inferred country's region
+    comes from the same lookup. Map-only: no row id, join or shuffle.
 
     ``case_insensitive`` (default True) governs the place-text fallback
     match, matching the reference, which lowercases both place and country
     before the containment test (add_region.py:40-44). Oracles must encode
     the same choice (``(?i)`` in RE2) — ADVICE r07.
     """
-    spark = events.sparkSession
-    if id_col is None:
-        # monotonically_increasing_id is nondeterministic across plan
-        # re-evaluations (the base side and the miss subset below both
-        # reference this subtree): pin the ids with a lineage barrier so
-        # every branch sees the same assignment. Pass a natural id_col
-        # at scale to skip the materialization.
-        events = reuse(
-            events.withColumn("__row_id", F.monotonically_increasing_id())
+    first: dict[str, str | None] = {}
+    for country, region in country_lookup:
+        first.setdefault(country, region)
+    prio = F.when(
+        F.col("country").isNull(),
+        token_priority(place_col, list(first), case_insensitive),
+    )
+    return (
+        spatial_join(events, polygons, lon_col, lat_col)
+        .withColumn("__prio", prio)
+        .withColumns(
+            {
+                "country": F.coalesce(
+                    "country", _lookup(enumerate(first), F.col("__prio"))
+                ),
+                "region": F.coalesce(
+                    "region", _lookup(enumerate(first.values()), F.col("__prio"))
+                ),
+            }
         )
-        id_col = "__row_id"
-
-    # The spatial result is referenced by BOTH branches below (the miss
-    # subset and the coalesce base): without a lineage barrier Catalyst
-    # re-evaluates the ray-cast Python stage once per reference (the
-    # plan showed py=3/scan=3). Materialize it once — the Python stage
-    # is the expensive part; at scale prefer paying one events-sized
-    # cache over three polygon sweeps.
-    spatial = reuse(spatial_join(events, polygons, lon_col, lat_col))
-
-    misses = spatial.filter(F.col("country").isNull()).select(id_col, place_col)
-    tokens = [c for c, _ in country_lookup]
-    inferred = regex_token_join(
-        misses,
-        place_col,
-        tokens,
-        [id_col],
-        out_col="inferred_country",
-        case_insensitive=case_insensitive,
+        .drop("__prio")
     )
-    lookup = F.broadcast(
-        spark.createDataFrame(list(country_lookup), ["lk_country", "lk_region"])
-    )
-    inferred = inferred.join(
-        lookup, inferred.inferred_country == lookup.lk_country, "left"
-    ).select(id_col, "inferred_country", F.col("lk_region").alias("inferred_region"))
-
-    out = coalesce_fill(
-        spatial,
-        inferred,
-        [id_col],
-        [("country", "inferred_country"), ("region", "inferred_region")],
-    )
-    return out.drop("__row_id") if id_col == "__row_id" else out

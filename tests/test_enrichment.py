@@ -3,16 +3,23 @@ FIXTURES.md F3 semantics: polygon hit / ocean+token fallback / neither)."""
 
 from __future__ import annotations
 
+import string
+
 import numpy as np
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from earthquake_data_pipeline_spark.functions.geo import (
     parse_wkt_polygon,
     points_in_polygon,
 )
+from earthquake_data_pipeline_spark.functions.scalar import token_pattern
 from earthquake_data_pipeline_spark.operators.enrichment import (
     enrich_events,
     regex_token_join,
     spatial_join,
+    token_priority,
 )
 
 # Rectangles (non-overlapping) + one MULTIPOLYGON + a polygon with a hole.
@@ -83,7 +90,7 @@ def test_enrich_events_composition(spark):
     ]
     df = spark.createDataFrame(rows, ["id", "place", "longitude", "latitude"])
     out = {r.id: (r.country, r.region) for r in
-           enrich_events(df, POLYGONS, LOOKUP, id_col="id").collect()}
+           enrich_events(df, POLYGONS, LOOKUP).collect()}
     assert out[1] == ("Japonia", "Asia")
     assert out[2] == ("Chilea", "Americas")
     assert out[3] == ("Alaska", "Americas")
@@ -99,12 +106,91 @@ def test_enrich_events_fallback_is_case_insensitive(spark):
     (ADVICE r07 — the oracle carries (?i) for the same contract)."""
     rows = [(1, "off the coast of chilea", 0.0, -80.0)]
     df = spark.createDataFrame(rows, ["id", "place", "longitude", "latitude"])
-    out = enrich_events(df, POLYGONS, LOOKUP, id_col="id").collect()[0]
+    out = enrich_events(df, POLYGONS, LOOKUP).collect()[0]
     assert (out.country, out.region) == ("Chilea", "Americas")
     strict = enrich_events(
-        df, POLYGONS, LOOKUP, id_col="id", case_insensitive=False
+        df, POLYGONS, LOOKUP, case_insensitive=False
     ).collect()[0]
     assert (strict.country, strict.region) == (None, None)
+
+
+def test_enrich_events_duplicate_country_name_takes_first_row(spark):
+    """A name listed twice in the lookup counts once, with its FIRST
+    region: a fallback-matched event is emitted once, not once per
+    lookup row."""
+    rows = [(2, "off the coast of Chilea", 0.0, -80.0)]
+    df = spark.createDataFrame(rows, ["id", "place", "longitude", "latitude"])
+    out = enrich_events(
+        df, POLYGONS, LOOKUP + [("Chilea", "Antarctica")]
+    ).collect()
+    assert [(r.id, r.country, r.region) for r in out] == [
+        (2, "Chilea", "Americas")
+    ]
+
+
+# Differential test of token_priority against a per-token RLIKE scan in
+# list order on the same JVM. Places mix ASCII of both cases, digits,
+# '_', punctuation and non-ASCII letters; tokens include multi-word
+# names, regex metacharacters, case-only duplicates, non-ASCII names and
+# a token that is a suffix of another ("New Land" / "Land").
+_ALPHABET = string.ascii_letters + string.digits + "_ .,-()[]*+?|\\" + "éßİ"
+_WORD = st.text(alphabet=_ALPHABET, min_size=1, max_size=6)
+_SPECIAL = ["C++", "St. Kitts", "a.b", "(x)", "Curaçao", "İzmir", "straße",
+            "LAND", "land"]
+_SEPARATORS = st.sampled_from(["", " ", ", ", "-", "_", "é"])
+
+
+@st.composite
+def _tokens_and_places(draw):
+    base = draw(
+        st.lists(st.one_of(_WORD, st.sampled_from(_SPECIAL)), max_size=8)
+    )
+    base += ["New Land", "Land"]
+    recased = draw(st.lists(st.sampled_from(base).map(str.swapcase), max_size=2))
+    tokens = draw(st.permutations(base + recased))
+    piece = st.one_of(
+        st.sampled_from(tokens),
+        st.sampled_from(tokens).map(str.upper),
+        st.sampled_from(tokens).map(str.lower),
+        _WORD,
+    )
+    places = []
+    for pieces in draw(st.lists(st.lists(piece, max_size=4), max_size=6)):
+        text = ""
+        for p in pieces:
+            text += draw(_SEPARATORS) + p
+        places.append(text)
+    return tokens, places
+
+
+@settings(max_examples=40, deadline=None)
+@given(case=_tokens_and_places(), case_insensitive=st.booleans())
+# the suffix token wins inside the longer name it overlaps
+@example(case=(["Land", "New Land"], ["New Land", "NEW LAND"]),
+         case_insensitive=True)
+@example(case=(["LAND", "Land", "İzmir"], ["land", "İZMIR", "İzmir"]),
+         case_insensitive=False)
+def test_token_priority_matches_per_token_rlike(spark, case, case_insensitive):
+    tokens, places = case
+    # a matching row, then a no-match row and a NULL in ONE partition:
+    # the shape where element_at(array, NULL) would return a stale index
+    rows = [(p,) for p in places] + [("Land",), ("",), (None,)]
+    df = spark.createDataFrame(rows, "place string").coalesce(1)
+    flag = "(?i)" if case_insensitive else ""
+    oracle = F.coalesce(
+        *[
+            F.when(F.col("place").rlike(flag + token_pattern(t)), F.lit(i))
+            for i, t in enumerate(tokens)
+        ]
+    )
+    got = df.select(
+        "place",
+        token_priority("place", tokens, case_insensitive).alias("got"),
+        oracle.alias("want"),
+    ).collect()
+    assert [(r.place, r.got) for r in got] == [(r.place, r.want) for r in got]
+    assert got[-3].got is not None
+    assert [r.got for r in got[-2:]] == [None, None]
 
 
 def test_polygon_dim_parse_amortized(spark):

@@ -179,6 +179,20 @@ def test_spatial_join_is_map_only(spark):
     assert "BatchEvalPython" not in plan
 
 
+def test_enrichment_is_one_map_only_projection(spark):
+    # spatial join + ONE projection for the place-name fallback: no
+    # crossJoin, window, join back, shuffle or row-id checkpoint
+    plan = plan_of(spark, "enrich_events")
+    assert "Exchange" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Window" not in plan
+    assert plan.count("MapInPandas") == 1
+    assert "Scan ExistingRDD" not in plan
+    plan = plan_of(spark, "regex_token_match")
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Exchange" not in plan
+
+
 def test_bigram_lm_score_single_corpus_scan(spark):
     # round-6 restructure: the tokenized corpus is checkpointed once, so
     # the scoring plan's three token references (pairs ×2, unigrams) all

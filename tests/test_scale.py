@@ -261,6 +261,35 @@ def test_percentile_moments_by_counts_matches_row_form(spark):
     assert got["const"][2] == 0.0  # exactly zero, not 1e-13
 
 
+def test_percentile_moments_sd_out_of_domain_is_null_in_both_ansi_modes(spark):
+    """A key with any |value| >= 1e6 (or NaN) gets a NULL sd whether ANSI
+    is on or off: the exact decimal sum would throw on it under ANSI and
+    silently skip it without. In-domain keys and the percentiles are
+    unaffected."""
+    from earthquake_data_pipeline_spark.operators.analytics import (
+        percentile_moments_by_counts,
+    )
+
+    rows = [("ok", 1.0), ("ok", 2.0), ("ok", 3.0),
+            ("big", 1.0), ("big", 2.0e6), ("big", 3.0),
+            ("nan", 1.0), ("nan", float("nan"))]
+    df = spark.createDataFrame(rows, "k string, v double")
+    saved = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            got = {
+                r["k"]: (r["p_0"], r["n"], r["sd"])
+                for r in percentile_moments_by_counts(df, "k", "v", [0.5])
+                .collect()
+            }
+            assert got["ok"] == (2.0, 3, 1.0), ansi
+            assert got["big"] == (3.0, 3, None), ansi
+            assert got["nan"][1:] == (2, None), ansi
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", saved)
+
+
 def test_percentile_by_counts_plan_has_no_row_level_sort_buffer(spark):
     """The point of the histogram form: the only per-key window runs
     over DISTINCT VALUES (post-aggregation), and no sort-based
