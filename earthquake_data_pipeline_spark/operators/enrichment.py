@@ -11,9 +11,10 @@ The reference enriches events with country/region via three mechanisms
 Spark-first restatement: one lazy, map-only plan instead of a 100k-row
 chunk loop — no row id, join, window or shuffle:
 
-- ``spatial_join``   — mapInPandas over the points with the (KB-sized)
-  polygon dim broadcast; numpy ray-casting with bbox prefilter per polygon
-  (functions/geo.py). Embarrassingly parallel, scales linearly.
+- ``spatial_join``   — mapInPandas over the points with the parsed polygon
+  dim in its closure; numpy ray-casting with bbox prefilter per polygon
+  (functions/geo.py). Embarrassingly parallel, scales linearly. The dim
+  is a plain value (``PolygonDim``): nothing is cached across calls.
 - ``token_priority`` — the fallback as one Column: a single literal regex
   finds every word-token match in a row, and the lowest list index among
   them wins (first-match-wins), entirely inside the JVM's regex engine.
@@ -53,7 +54,7 @@ def _build_bbox_grid(parsed):
     same polygons in the same order as the full scan, minus the
     non-overlapping ones. ~sqrt(P) cells per axis targets O(1)
     candidates per cell for evenly-spread dims; the whole structure is
-    KB-per-thousand-polygons and ships in the same broadcast.
+    KB-per-thousand-polygons and ships in the same closure.
     """
     import math
 
@@ -78,19 +79,17 @@ def _build_bbox_grid(parsed):
 
 class PolygonDim:
     """Pre-parsed polygon dim (VERDICT r07 item 6): rings as numpy
-    arrays + bboxes, parsed ONCE from WKT, with the bbox grid and the
-    per-SparkContext broadcast cached on the instance. At 131k polygons
-    the one-time driver-side WKT float parse dominated BOTH spatial
-    strategies (DESIGN.md round-7 crossover table); repeated
-    spatial_join / enrich_events calls in one session now pay it once.
-
-    Build explicitly via ``parse_polygon_dim(polygons)`` and pass the
-    instance anywhere a (country, region, wkt) sequence is accepted —
-    or keep passing raw tuples: an internal content-keyed memo gives
-    repeated raw-tuple calls the same amortization.
+    arrays + bboxes, parsed ONCE from WKT, with the bbox grid built
+    lazily on the instance. A plain value with no Spark state. At 131k
+    polygons the driver-side WKT float parse dominated BOTH spatial
+    strategies (DESIGN.md round-7 crossover table), so a caller that
+    joins against the same dim repeatedly builds one
+    ``parse_polygon_dim(polygons)`` and passes the instance anywhere a
+    (country, region, wkt) sequence is accepted; raw tuples are parsed
+    on every call.
     """
 
-    __slots__ = ("parsed", "_grid", "_bcs")
+    __slots__ = ("parsed", "_grid")
 
     def __init__(
         self, polygons: Sequence[tuple[str, str | None, str | None]]
@@ -102,7 +101,6 @@ class PolygonDim:
             polys = parse_wkt_polygon(wkt)
             self.parsed.append((country, region, polys, ring_bbox(polys)))
         self._grid = None
-        self._bcs: dict = {}
 
     def grid(self):
         """Bbox grid over the parsed dim, built lazily exactly once."""
@@ -110,83 +108,15 @@ class PolygonDim:
             self._grid = _build_bbox_grid(self.parsed)
         return self._grid
 
-    def broadcast_for(self, sc, with_grid: bool):
-        """Cached (parsed, grid|None) Broadcast per (SparkContext, grid
-        flag). Keys hold a strong ref to the context and re-check
-        identity, so a NEW context after a restart re-broadcasts
-        instead of reusing a handle from a stopped JVM.
-
-        Entries whose context has since STOPPED are evicted (and their
-        Broadcast destroyed) on every call — without this, a long-lived
-        driver that restarts sessions pins every dead context and its
-        executor-side broadcast blocks forever (ADVICE r08)."""
-        for k in [k for k, (c, _) in self._bcs.items() if _sc_stopped(c)]:
-            _, dead = self._bcs.pop(k)
-            try:
-                dead.destroy(blocking=False)
-            except Exception:
-                pass  # the JVM behind the handle is already gone
-        key = (id(sc), bool(with_grid))
-        hit = self._bcs.get(key)
-        if hit is not None and hit[0] is sc:
-            return hit[1]
-        bc = sc.broadcast((self.parsed, self.grid() if with_grid else None))
-        self._bcs[key] = (sc, bc)
-        return bc
-
-
-def _sc_stopped(sc) -> bool:
-    """True once SparkContext.stop() has run (PySpark nulls _jsc)."""
-    return getattr(sc, "_jsc", None) is None
-
-
-# Content-keyed memo for raw-tuple callers: the tuple key is O(P) string
-# hashing per call — ~1000x cheaper than re-parsing WKT floats — and dict
-# equality on the full key makes collisions impossible, not just unlikely.
-# LRU: insertion order IS recency order (hits re-insert); at capacity the
-# single oldest entry is evicted — not a wholesale clear(), which threw
-# away 7 warm dims to admit 1 (ADVICE r08).
-_DIM_CACHE: dict[tuple, PolygonDim] = {}
-_DIM_CACHE_MAX = 8
-
 
 def parse_polygon_dim(
     polygons: "Sequence[tuple[str, str | None, str | None]] | PolygonDim",
 ) -> PolygonDim:
     """Parse (country, region, wkt) tuples into a reusable PolygonDim;
-    idempotent on an already-parsed dim, memoized on raw content."""
+    an already-parsed dim is returned as is."""
     if isinstance(polygons, PolygonDim):
         return polygons
-    key = tuple((c, r, w) for c, r, w in polygons)
-    dim = _DIM_CACHE.pop(key, None)
-    if dim is None:
-        if len(_DIM_CACHE) >= _DIM_CACHE_MAX:
-            evicted = _DIM_CACHE.pop(next(iter(_DIM_CACHE)))
-            # Eviction drops the driver's last strong ref to the dim,
-            # but its Broadcasts on still-LIVE contexts would keep
-            # executor-side blocks pinned until GC (ADVICE r09 — same
-            # leak class as the stopped-context path in broadcast_for).
-            # Live contexts get unpersist, NOT destroy (ADVICE r10):
-            # parse_polygon_dim returns dims to callers, so a lazy
-            # DataFrame built earlier can still hold the Broadcast
-            # handle in its closure — destroy() would fail that job at
-            # action time ("Attempted to use Broadcast after it was
-            # destroyed"), while unpersist() frees the executor blocks
-            # and lets any late action re-fetch from the driver.
-            # destroy() is reserved for STOPPED contexts, where no
-            # action can ever run again.
-            for ctx, bc in evicted._bcs.values():
-                try:
-                    if _sc_stopped(ctx):
-                        bc.destroy(blocking=False)
-                    else:
-                        bc.unpersist(blocking=False)
-                except Exception:
-                    pass  # JVM already gone or handle already destroyed
-            evicted._bcs.clear()
-        dim = PolygonDim(polygons)
-    _DIM_CACHE[key] = dim
-    return dim
+    return PolygonDim(polygons)
 
 
 def spatial_join(
@@ -196,15 +126,16 @@ def spatial_join(
     lat_col: str = "latitude",
     country_col: str = "country",
     region_col: str = "region",
-    grid_index: bool | None = None,
 ) -> DataFrame:
     """R2 — point-in-polygon left join, first matching polygon wins.
 
     ``polygons`` is the driver-side dim: (country, region, wkt) tuples
-    or a pre-parsed ``PolygonDim`` — world polygons are KB-MB scale (258
-    rows in the reference), so a Spark broadcast variable ships them once
-    per executor; the WKT parse, grid build and broadcast are all
-    amortized across calls (PolygonDim). Rows matching no polygon get
+    or a pre-parsed ``PolygonDim`` (pass one to parse the WKT once across
+    calls). The parsed dim rides in the mapInPandas closure, which Spark
+    ships once per stage in the task binary; past
+    ``spark.broadcast.UDFCompressionThreshold`` (1 MiB) PySpark turns the
+    pickled closure into a broadcast variable on its own, so a large dim
+    still travels once per executor. Rows matching no polygon get
     NULL country/region (left-join semantics). Name-only dim rows
     (wkt=None, e.g. the reference's manual 'Alaska' row) are skipped
     here — they participate in the regex fallback instead
@@ -216,25 +147,19 @@ def spatial_join(
     - linear per-batch scan over all polygons with a vectorized bbox
       prefilter — the right shape for the reference's 259-row dim,
       where the O(P) bbox tests are cheaper than grouping overhead;
-    - bbox-grid index (``grid_index=True``; auto past
-      ``_MAX_LINEAR_POLYGONS``) — points are bucketed into a driver-
-      built ~sqrt(P)×sqrt(P) grid over the dim extent and only each
-      cell's overlapping polygons are tested, in index order, so
-      first-polygon-wins priority is preserved exactly. This removes
-      the O(points × P) bbox-test wall for dims of many thousands of
-      polygons (admin-level-2 boundaries etc.); measured crossover in
-      DESIGN.md.
+    - bbox-grid index (past ``_MAX_LINEAR_POLYGONS`` polygons) —
+      points are bucketed into a driver-built ~sqrt(P)×sqrt(P) grid
+      over the dim extent and only each cell's overlapping polygons
+      are tested, in index order, so first-polygon-wins priority is
+      preserved exactly. This removes the O(points × P) bbox-test wall
+      for dims of many thousands of polygons (admin-level-2 boundaries
+      etc.); measured crossover in DESIGN.md.
     """
     import pandas as pd
 
     dim = parse_polygon_dim(polygons)
-    if grid_index is None:
-        grid_index = len(dim.parsed) > _MAX_LINEAR_POLYGONS
-
-    spark = points.sparkSession
-    bc = dim.broadcast_for(
-        spark.sparkContext, bool(grid_index and dim.parsed)
-    )
+    polys = dim.parsed
+    grd = dim.grid() if len(polys) > _MAX_LINEAR_POLYGONS else None
 
     # NB: StructType.add mutates in place — never call it on df.schema
     # (it corrupts the DataFrame's cached Python-side schema).
@@ -248,8 +173,6 @@ def spatial_join(
 
     def fn(batches):
         import numpy as np
-
-        polys, grd = bc.value
 
         def assign_linear(lon, lat, open_mask, country, region):
             for c, r, rings, (minx, miny, maxx, maxy) in polys:
@@ -409,7 +332,7 @@ def regex_token_join(
 
 def enrich_events(
     events: DataFrame,
-    polygons: Sequence[tuple[str, str | None, str]],
+    polygons: "Sequence[tuple[str, str | None, str]] | PolygonDim",
     country_lookup: Sequence[tuple[str, str | None]],
     place_col: str = "place",
     lon_col: str = "longitude",

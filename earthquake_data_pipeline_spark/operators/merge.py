@@ -69,14 +69,13 @@ def incremental_upsert(
     existing: DataFrame,
     keys: Sequence[str],
     ts_col: str,
-    use_hwm: bool = True,
 ) -> DataFrame:
     """I1 — the full incremental routine: HWM → dedup-within-batch → anti-join.
 
     Returns the rows to append. Running the same batch twice appends zero
     rows (idempotence property test in tests/test_merge.py).
     """
-    batch = high_water_mark_filter(new, existing, ts_col) if use_hwm else new
+    batch = high_water_mark_filter(new, existing, ts_col)
     # r12 (pre-committed at r11 close): keep-1 via the min-struct
     # aggregate — partial-aggregates map-side, so a hot merge key
     # collapses before the shuffle instead of serializing into one

@@ -194,35 +194,36 @@ def test_token_priority_matches_per_token_rlike(spark, case, case_insensitive):
 
 
 def test_polygon_dim_parse_amortized(spark):
-    """VERDICT r07 item 6: repeated spatial_join calls with the same raw
-    tuples must reuse ONE PolygonDim (one WKT parse, one broadcast per
-    context+strategy), and an explicitly pre-parsed dim must behave
-    identically to raw tuples."""
+    """VERDICT r07 item 6: a caller amortizes the WKT parse by holding
+    one PolygonDim; it must behave identically to raw tuples, and
+    parsing it again must return it unchanged."""
     from earthquake_data_pipeline_spark.operators.enrichment import (
         PolygonDim,
         parse_polygon_dim,
     )
 
-    d1 = parse_polygon_dim(POLYGONS)
-    d2 = parse_polygon_dim(list(POLYGONS))  # same content, new list
-    assert d1 is d2  # content-keyed memo hit
-    assert parse_polygon_dim(d1) is d1  # idempotent on parsed dims
-
-    sc = spark.sparkContext
-    b1 = d1.broadcast_for(sc, False)
-    b2 = d1.broadcast_for(sc, False)
-    assert b1 is b2  # broadcast cached per (context, grid flag)
-    assert d1.broadcast_for(sc, True) is not b1  # grid variant distinct
+    explicit = PolygonDim(POLYGONS)
+    assert parse_polygon_dim(explicit) is explicit
 
     rows = [(1, 140.0, 35.0), (2, -150.0, -10.0)]
     df = spark.createDataFrame(rows, ["id", "longitude", "latitude"])
     via_raw = {r.id: r.country for r in spatial_join(df, POLYGONS).collect()}
-    explicit = PolygonDim(POLYGONS)
     via_dim = {r.id: r.country for r in spatial_join(df, explicit).collect()}
     assert via_raw == via_dim == {1: "Japonia", 2: None}
 
 
-def test_spatial_join_grid_index_matches_linear(spark):
+def _countries(df, dim, monkeypatch, grid: bool) -> dict:
+    """spatial_join forced onto one strategy: the grid engages past
+    _MAX_LINEAR_POLYGONS, so the cap picks it."""
+    from earthquake_data_pipeline_spark.operators import enrichment as E
+
+    monkeypatch.setattr(E, "_MAX_LINEAR_POLYGONS", 0 if grid else 10**9)
+    return {
+        r.id: (r.country, r.region) for r in spatial_join(df, dim).collect()
+    }
+
+
+def test_spatial_join_grid_index_matches_linear(spark, monkeypatch):
     """The bbox-grid strategy (the >_MAX_LINEAR_POLYGONS successor,
     VERDICT r06 item 7) must reproduce the linear scan exactly on the
     sanity dim — including hole and MULTIPOLYGON semantics."""
@@ -232,19 +233,13 @@ def test_spatial_join_grid_index_matches_linear(spark):
         (7, -70.0, -30.0), (8, 165.0, -40.0),
     ]
     df = spark.createDataFrame(rows, ["id", "longitude", "latitude"])
-    linear = {
-        r.id: (r.country, r.region)
-        for r in spatial_join(df, POLYGONS, grid_index=False).collect()
-    }
-    grid = {
-        r.id: (r.country, r.region)
-        for r in spatial_join(df, POLYGONS, grid_index=True).collect()
-    }
+    linear = _countries(df, POLYGONS, monkeypatch, grid=False)
+    grid = _countries(df, POLYGONS, monkeypatch, grid=True)
     assert grid == linear
     assert grid[6] == ("Donutland", "Europe")  # solid part of holed poly
 
 
-def test_spatial_join_grid_preserves_first_polygon_priority(spark):
+def test_spatial_join_grid_preserves_first_polygon_priority(spark, monkeypatch):
     """Overlapping polygons: the FIRST polygon in dim order wins on both
     strategies (the grid's per-cell candidate lists are index-ordered)."""
     overlapping = [
@@ -255,28 +250,32 @@ def test_spatial_join_grid_preserves_first_polygon_priority(spark):
         [(1, 7.0, 7.0), (2, 12.0, 12.0), (3, 2.0, 2.0)],
         ["id", "longitude", "latitude"],
     )
-    for flag in (False, True):
-        out = {
-            r.id: r.country
-            for r in spatial_join(df, overlapping, grid_index=flag).collect()
-        }
-        assert out == {1: "First", 2: "Second", 3: "First"}, flag
+    first, second = ("First", "A"), ("Second", "B")
+    for grid in (False, True):
+        out = _countries(df, overlapping, monkeypatch, grid)
+        assert out == {1: first, 2: second, 3: first}, grid
 
 
 def test_spatial_join_auto_grid_past_linear_cap(spark):
     """A dim beyond _MAX_LINEAR_POLYGONS no longer raises: the grid path
-    engages automatically and classifies correctly."""
+    engages automatically and classifies correctly. The parsed dim and
+    its grid ride in the mapInPandas closure, and at this size they are
+    past PySpark's 1 MiB UDF broadcast threshold, so the closure itself
+    is shipped as a broadcast variable."""
+    from pyspark.serializers import CloudPickleSerializer
+
     from earthquake_data_pipeline_spark.operators.enrichment import (
         _MAX_LINEAR_POLYGONS,
+        parse_polygon_dim,
     )
 
     # (2*cap) 1x1-degree tiles laid out on a row-major lattice
     n = _MAX_LINEAR_POLYGONS * 2
     per_row = 100
-    dim = []
+    tiles = []
     for k in range(n):
         x0, y0 = (k % per_row), (k // per_row)
-        dim.append(
+        tiles.append(
             (
                 f"tile_{k}",
                 None,
@@ -284,6 +283,9 @@ def test_spatial_join_auto_grid_past_linear_cap(spark):
                 f"{x0} {y0 + 1}, {x0} {y0}))",
             )
         )
+    dim = parse_polygon_dim(tiles)
+    shipped = CloudPickleSerializer().dumps((dim.parsed, dim.grid()))
+    assert len(shipped) > 1 << 20
     pts = [
         (0, 0.5, 0.5),        # tile_0
         (1, 55.5, 3.5),       # tile_355
@@ -291,17 +293,14 @@ def test_spatial_join_auto_grid_past_linear_cap(spark):
         (3, 150.0, 150.0),    # outside every tile
     ]
     df = spark.createDataFrame(pts, ["id", "longitude", "latitude"])
-    out = {
-        r.id: r.country
-        for r in spatial_join(df, [(c, r_, w) for c, r_, w in dim]).collect()
-    }
+    out = {r.id: r.country for r in spatial_join(df, dim).collect()}
     assert out[0] == "tile_0"
     assert out[1] == f"tile_{3 * per_row + 55}"
     assert out[2] == f"tile_{81 * per_row + 91}"
     assert out[3] is None
 
 
-def test_spatial_join_grid_handles_extent_max_edge_and_nulls(spark):
+def test_spatial_join_grid_handles_extent_max_edge_and_nulls(spark, monkeypatch):
     """Points exactly ON the dim extent's max edge must route through
     the SAME polygon tests as the linear scan (the grid clamps them
     into the last cell instead of silently dropping them — exact
@@ -323,124 +322,25 @@ def test_spatial_join_grid_handles_extent_max_edge_and_nulls(spark):
     df = spark.createDataFrame(
         rows, "id int, longitude double, latitude double"
     )
-    linear = {
-        r.id: r.country
-        for r in spatial_join(df, edge_dim, grid_index=False).collect()
-    }
-    grid = {
-        r.id: r.country
-        for r in spatial_join(df, edge_dim, grid_index=True).collect()
-    }
+    linear = _countries(df, edge_dim, monkeypatch, grid=False)
+    grid = _countries(df, edge_dim, monkeypatch, grid=True)
     assert grid == linear
-    assert grid[4] == "High" and grid[5] is None and grid[6] is None
+    assert grid[4][0] == "High" and grid[5][0] is None and grid[6][0] is None
 
 
-class _FakeBroadcast:
-    """Records destroy()/unpersist() calls; stands in for a pyspark
-    Broadcast."""
-
-    def __init__(self):
-        self.destroyed = False
-        self.unpersisted = False
-
-    def destroy(self, blocking=False):
-        self.destroyed = True
-
-    def unpersist(self, blocking=False):
-        self.unpersisted = True
-
-
-class _FakeStoppedContext:
-    """Looks stopped to _sc_stopped (no _jsc attribute set)."""
-
-    _jsc = None
-
-
-def test_polygon_dim_evicts_dead_context_broadcasts(spark):
-    """ADVICE r08 / VERDICT r09 item 2b: broadcast_for must evict
-    cache entries whose SparkContext has stopped — and destroy their
-    Broadcast handles — instead of pinning every dead context forever
-    in a long-lived driver that restarts sessions."""
-    from earthquake_data_pipeline_spark.operators.enrichment import (
-        PolygonDim,
+def test_lazy_spatial_join_runs_after_other_dims_are_used(spark):
+    """ADVICE r10 regression: a lazy DataFrame built from one dim must
+    still execute after joins against other dims have run — the dim
+    travels in the frame's own closure, so no later call can release
+    it."""
+    box = [("Box", "R", "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))")]
+    pts = spark.createDataFrame(
+        [(1, 1.0, 1.0), (2, 5.0, 5.0)], ["id", "latitude", "longitude"]
     )
-
-    dim = PolygonDim(POLYGONS)
-    dead_sc, dead_bc = _FakeStoppedContext(), _FakeBroadcast()
-    dim._bcs[(id(dead_sc), False)] = (dead_sc, dead_bc)
-
-    sc = spark.sparkContext
-    live = dim.broadcast_for(sc, False)  # any call sweeps dead entries
-    assert (id(dead_sc), False) not in dim._bcs  # dead entry evicted
-    assert dead_bc.destroyed
-    assert dim._bcs[(id(sc), False)][1] is live  # live entry intact
-
-
-def test_dim_cache_lru_order_and_eviction_releases_broadcasts(spark):
-    """VERDICT r09 item 2c + ADVICE r09/r10: the _DIM_CACHE LRU must
-    evict the LEAST-recently-used dim (a re-parse touch refreshes
-    recency), and eviction must release the evicted dim's Broadcasts —
-    unpersist() for LIVE contexts (a caller-held lazy DataFrame may
-    still reference the handle; executors re-fetch from the driver on
-    its next action), destroy() only for STOPPED ones."""
-    from earthquake_data_pipeline_spark.operators import enrichment as E
-
-    saved = dict(E._DIM_CACHE)
-    E._DIM_CACHE.clear()
-    try:
-        def dim_tuples(i):
-            return [(f"C{i}", "R", "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")]
-
-        dims = [E.parse_polygon_dim(dim_tuples(i))
-                for i in range(E._DIM_CACHE_MAX)]  # fill to capacity
-        # give the would-be victim a live fake broadcast to observe
-        bc0 = _FakeBroadcast()
-        dims[0]._bcs[("fake", False)] = (spark.sparkContext, bc0)
-        # touch the oldest → dims[1] becomes least-recently-used
-        assert E.parse_polygon_dim(dim_tuples(0)) is dims[0]
-        bc1 = _FakeBroadcast()
-        dims[1]._bcs[("fake", False)] = (spark.sparkContext, bc1)
-        bc1_dead = _FakeBroadcast()
-        dims[1]._bcs[("fake-dead", False)] = (_FakeStoppedContext(), bc1_dead)
-        E.parse_polygon_dim(dim_tuples(E._DIM_CACHE_MAX))  # 9th insert
-        # the touched dim survives; the LRU one (dims[1]) was evicted
-        assert E.parse_polygon_dim(dim_tuples(0)) is dims[0]
-        assert E.parse_polygon_dim(dim_tuples(1)) is not dims[1]
-        # live-context handle released with unpersist, NEVER destroy
-        assert bc1.unpersisted and not bc1.destroyed
-        # stopped-context handle destroyed outright
-        assert bc1_dead.destroyed and not bc1_dead.unpersisted
-        assert not bc0.unpersisted and not bc0.destroyed
-        assert not dims[1]._bcs  # evicted dim's broadcast map cleared
-    finally:
-        E._DIM_CACHE.clear()
-        E._DIM_CACHE.update(saved)
-
-
-def test_dim_cache_eviction_keeps_caller_held_dataframes_alive(spark):
-    """ADVICE r10 regression: a lazy DataFrame built from a dim BEFORE
-    the dim is evicted must still execute AFTER eviction — destroy()
-    here used to fail the late action with 'Attempted to use Broadcast
-    after it was destroyed'; unpersist() lets executors re-fetch."""
-    from earthquake_data_pipeline_spark.operators import enrichment as E
-
-    saved = dict(E._DIM_CACHE)
-    E._DIM_CACHE.clear()
-    try:
-        victim = E.parse_polygon_dim(
-            [("Box", "R", "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))")]
-        )
-        pts = spark.createDataFrame(
-            [(1, 1.0, 1.0), (2, 5.0, 5.0)], ["id", "latitude", "longitude"]
-        )
-        lazy = E.spatial_join(pts, victim)  # builds + caches a Broadcast
-        lazy.count()  # materialize the broadcast on the live context
-        for i in range(E._DIM_CACHE_MAX + 1):  # force victim's eviction
-            E.parse_polygon_dim(
-                [(f"C{i}", "R", "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")]
-            )
-        got = {r.id: r.country for r in lazy.collect()}  # late action
-        assert got == {1: "Box", 2: None}
-    finally:
-        E._DIM_CACHE.clear()
-        E._DIM_CACHE.update(saved)
+    lazy = spatial_join(pts, box)
+    lazy.count()
+    for i in range(3):
+        other = [(f"C{i}", "R", "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")]
+        assert spatial_join(pts, other).count() == 2
+    got = {r.id: r.country for r in lazy.collect()}  # late action
+    assert got == {1: "Box", 2: None}

@@ -172,7 +172,7 @@ def test_spatial_join_is_map_only(spark):
     # R2 stays a broadcast-dim mapInPandas over the scan: one Python
     # stage, ZERO exchanges — the property that makes point-in-polygon
     # enrichment scale linearly with the fact side (VERDICT r5 item 6;
-    # the 259-polygon reference dim rides a driver-side broadcast var)
+    # the 259-polygon reference dim rides in the mapInPandas closure)
     plan = plan_of(spark, "spatial_join")
     assert "Exchange" not in plan
     assert plan.count("MapInPandas") == 1
