@@ -440,13 +440,12 @@ def q_union_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1+W1 (stg_earthquake first-run branch): union of two overlapping
     slices, keyed dedup, per-type census.
 
-    Migrated r12 (pre-committed at r11 close): the keep-1 dedup is
-    ``dedup_keep_first`` — a min-struct aggregate with a deterministic
-    ts tiebreak that partial-aggregates map-side, so a duplicate-mass
-    hot key collapses before the shuffle instead of serializing into
-    one window task. The W1 window form stays the reference-parity
-    face (stg_earthquake + the dedup_keep_first/dedup_row_number
-    total-order parity test)."""
+    The keep-1 dedup is ``dedup_keep_first`` (r12) — a ``min_by``
+    aggregate with a deterministic ts tiebreak that partial-aggregates
+    map-side, so a duplicate-mass hot key collapses before the shuffle
+    instead of serializing into one window task. The W1 window form
+    (``dedup_row_number``) survives only as the reference the
+    dedup_keep_first total-order parity test compares against."""
     _utc(spark)
     from .operators.dedup import dedup_keep_first
 
@@ -2212,7 +2211,7 @@ ORDER BY 1
 
 def q_usgs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end earthquake pipeline: paged-source ingest (synthetic mode,
-    offline) → cleaning chain → stg (surrogate keys + window dedup) → fact
+    offline) → cleaning chain (the one dedup) → stg (surrogate keys) → fact
     (severity/year/decade) → yearly rollup. FULL oracle: the synthetic
     generator is pure md5 arithmetic, so DuckDB replays the whole pipeline
     — generation included — in SQL. The terminal aggregate uses

@@ -14,16 +14,14 @@ cleaned layer to a NEW location.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import epoch_ms_to_timestamp, in_closed_range
 from ..schemas import (
-    DEFAULT_MAX_DATE,
-    DEFAULT_MIN_DATE,
     DEPTH_FILL,
+    EVENT_DATE_RANGE,
+    EVENT_KEY,
     LATITUDE_RANGE,
     LONGITUDE_RANGE,
     MAGNITUDE_RANGE,
@@ -43,16 +41,12 @@ def range_filter(df: DataFrame, bounds: dict[str, tuple]) -> DataFrame:
     return df if pred is None else df.filter(pred)
 
 
-def clean_events(
-    raw: DataFrame,
-    min_date: str = DEFAULT_MIN_DATE,
-    max_date: str = DEFAULT_MAX_DATE,
-    dedup_keys: Sequence[str] = ("place", "earthquake_datetime"),
-) -> DataFrame:
+def clean_events(raw: DataFrame) -> DataFrame:
     """The full cleaning chain (reference: pipeline/clean_historical.py:27-50).
 
     Input: RAW_EVENT_SCHEMA (+ optional country/region if pre-enriched).
-    Output: CLEAN_EVENT_SCHEMA. Lazy — composes into one optimized plan.
+    Output: CLEAN_EVENT_SCHEMA, unique on ``EVENT_KEY``. Lazy — composes
+    into one optimized plan.
     """
     has_enrichment = "country" in raw.columns
     projected = raw.withColumn(
@@ -79,9 +73,9 @@ def clean_events(
         },
     ).filter(
         in_closed_range(
-            "earthquake_datetime", F.lit(min_date).cast("timestamp"), F.lit(max_date).cast("timestamp")
+            "earthquake_datetime", *(F.lit(d).cast("timestamp") for d in EVENT_DATE_RANGE)
         )
     )
 
     # W2 keyed dedup (the plan's one shuffle) + D8 null-fill.
-    return filtered.dropDuplicates(list(dedup_keys)).na.fill({"depth": DEPTH_FILL})
+    return filtered.dropDuplicates(list(EVENT_KEY)).na.fill({"depth": DEPTH_FILL})

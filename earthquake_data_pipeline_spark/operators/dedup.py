@@ -1,17 +1,20 @@
 """Deduplication operators (SURVEY.md §2.6 W1/W2; north-star exact dedup).
 
-Three flavors, all single-shuffle (hash exchange on the dedup key):
+Four flavors, all single-shuffle (hash exchange on the dedup key):
 
 - ``dedup_keep_any``    — W2: dropDuplicates(subset) — keep an arbitrary row
   per key (reference: pipeline/clean_historical.py:48).
+- ``dedup_keep_first``  — keep the first row per key in a deterministic
+  (tiebreak, row) order, as a map-side-combined ``min_by`` aggregate over
+  any column type. The package's one keep-one dedup: ``incremental_upsert``
+  and ``foreach_batch_merge`` both call it.
 - ``dedup_row_number``  — W1: row_number() over (partition by key order by
-  tiebreak) + rn=1 (reference: dbt_files/models/core/stg_earthquake.sql:25-29,44).
-  With a DETERMINISTIC tiebreak this upgrades the reference's arbitrary pick
-  to a reproducible one — required for oracle equality on non-key columns.
+  tiebreak) + rn=1 (reference: dbt_files/models/core/stg_earthquake.sql:25-29,44),
+  kept as the reference form ``dedup_keep_first`` is tested against.
 - ``exact_dedup``       — whole-row (or hash-of-content) dedup for the
   training-data pipeline: group by content hash, keep min(id).
 
-Scale: all three are groupBy/Window over the key — partial aggregation
+Scale: all four are groupBy/Window over the key — partial aggregation
 map-side where possible, AQE handles skewed keys. No driver-side state.
 """
 
@@ -21,6 +24,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..qcommon import reuse
 
@@ -46,55 +50,53 @@ def dedup_row_number(
     )
 
 
+def _orderable(dt) -> bool:
+    """True iff Spark can ORDER BY a column of this type (r17, ADVICE
+    r16): MapType is non-orderable at any nesting depth (Catalyst's
+    TypeUtils rejects it inside arrays/structs too), as is VariantType.
+    Everything else — atomics, binary, arrays, structs — sorts.
+    """
+    if isinstance(dt, (T.MapType, T.VariantType)):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
+
+
 def dedup_keep_first(
     df: DataFrame,
     keys: Sequence[str],
-    tiebreak: Sequence[str],
+    tiebreak: Sequence[str] = (),
 ) -> DataFrame:
-    """Skew-immune aggregate twin of :func:`dedup_row_number` for the
-    keep-one case: the surviving row per key is the ARGMIN of the
-    (ascending) tiebreak columns, computed as ``min`` over a
-    (tiebreak…, payload) struct instead of a row_number window.
+    """Keep one row per key: the row with the smallest
+    ``(tiebreak…, row)`` tuple, as ``min_by(struct(all columns),
+    struct(*tiebreak, *row))`` — the package's one keep-one dedup.
 
-    Why it exists (round-11 window-skew audit): a per-key window
-    serializes each key into ONE task and is opaque to AQE — and dedup
-    keys are exactly where duplicate mass piles up at web scale (10^9
-    byte-identical copies of one hot page = one straggler task sorting
-    10^9 rows). A min-struct aggregate partial-aggregates map-side, so
-    the hot key reduces to one row per map task before the shuffle —
-    measured −45% on a 90%-one-key frame at local[32], and the gap is
-    unbounded in the skew. Trade: the window form preserves the
-    reference's W1 shape and supports rank>1 consumers (top-k); this
-    form only keeps rank 1.
+    Why an aggregate, not :func:`dedup_row_number`'s window (round-11
+    window-skew audit): a per-key window serializes each key into ONE
+    task and is opaque to AQE — and dedup keys are exactly where
+    duplicate mass piles up at web scale (10^9 byte-identical copies of
+    one hot page = one straggler task sorting 10^9 rows). The aggregate
+    partial-aggregates map-side, so the hot key reduces to one row per
+    map task before the shuffle — measured −45% on a 90%-one-key frame
+    at local[32], and the gap is unbounded in the skew. Trade: the
+    window form supports rank>1 consumers (top-k); this form only keeps
+    rank 1.
 
-    With a TOTAL tiebreak order the output is row-for-row identical to
-    ``dedup_row_number(df, keys, tiebreak)`` (test-pinned). With a
-    non-total tiebreak both forms pick deterministically among ties but
-    may pick DIFFERENT survivors (the window breaks ties by partition
-    order, the aggregate by the remaining payload columns) — pass a
-    total order when survivor identity matters.
+    The whole row follows the tiebreak in the ordering struct (ascending,
+    nulls first), so the survivor is deterministic even under tiebreak
+    ties. With a TOTAL tiebreak order the output is row-for-row
+    identical to ``dedup_row_number(df, keys, tiebreak)`` (test-pinned);
+    with a non-total one the window breaks ties by partition order, this
+    form by the remaining columns.
 
-    Type restriction (ADVICE r11): every column of ``df`` rides inside
-    the min() struct, so all columns must be ORDERABLE — a map<…>
-    column (which dedup_row_number carries fine as inert payload) has
-    no ordering and would fail at analysis with an opaque error; this
-    raises a clear TypeError up front instead. For frames with map
-    columns, use dedup_row_number, or drop/re-join the map column
-    around this call.
+    Any column type rides along. Non-orderable columns (a map or a
+    variant at any depth) enter the ordering struct as ``to_json`` —
+    deterministic for a given value's binary layout; every other column
+    keeps its native order (2.0 < 10.0, not the string order).
     """
-    # simpleString catches maps nested inside structs/arrays too
-    unorderable = [
-        f.name
-        for f in df.schema.fields
-        if "map<" in f.dataType.simpleString()
-    ]
-    if unorderable:
-        raise TypeError(
-            "dedup_keep_first: every column rides in the min() "
-            f"comparison struct, but map-typed columns {unorderable} "
-            "have no ordering — use dedup_row_number for frames with "
-            "map payload, or re-join the map columns after dedup"
-        )
     # backtick-quoted references and getField, never a bare dotted
     # string: a column literally named "user.id" must round-trip (the
     # window twin never re-parses payload names, so this form must not
@@ -102,13 +104,17 @@ def dedup_keep_first(
     def _c(name: str):
         return F.col("`" + name.replace("`", "``") + "`")
 
-    order = [_c(c) for c in tiebreak]
-    payload = F.struct(*[_c(c) for c in df.columns]).alias("__row")
+    row = [
+        _c(f.name) if _orderable(f.dataType) else F.to_json(_c(f.name))
+        for f in df.schema.fields
+    ]
     out = df.groupBy(*[_c(k) for k in keys]).agg(
-        F.min(F.struct(*order, payload)).alias("__w")
+        F.min_by(
+            F.struct(*[_c(c) for c in df.columns]),
+            F.struct(*[_c(c) for c in tiebreak], *row),
+        ).alias("__w")
     )
-    row = F.col("__w").getField("__row")
-    return out.select(*[row.getField(c).alias(c) for c in df.columns])
+    return out.select(*[F.col("__w").getField(c).alias(c) for c in df.columns])
 
 
 def exact_dedup(

@@ -10,8 +10,8 @@ Spark-first restatement:
   new rows survive; append them. Idempotent by construction (replaying a
   batch inserts 0 rows) — the I3 exactly-once-ish contract.
 - ``incremental_upsert``     — the full I1 routine: HWM filter → keep-1
-  dedup (min-struct aggregate since r12; window form for map payloads)
-  → anti-join → rows to append.
+  dedup (``dedup_keep_first``, any column type) → anti-join → rows to
+  append.
 
 Scale: the anti-join shuffles both sides on the key ONLY if the existing
 side is large; when `existing` is a month-partitioned table, partition
@@ -26,7 +26,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import dedup_keep_first, dedup_row_number
+from .dedup import dedup_keep_first
 
 
 def high_water_mark_filter(
@@ -58,10 +58,10 @@ def anti_join_merge(
     (caller appends them). When `existing` is big and `new` is a small
     increment, Catalyst/AQE broadcast the small side; the existing side
     only needs its KEY columns — project before joining so the scan is
-    2 columns, not the full row.
+    2 columns, not the full row. Duplicate keys on the existing side
+    need no distinct: a left-anti join keeps the same rows either way.
     """
-    existing_keys = existing.select(*keys).dropDuplicates(list(keys))
-    return new.join(existing_keys, on=list(keys), how="left_anti")
+    return new.join(existing.select(*keys), on=list(keys), how="left_anti")
 
 
 def incremental_upsert(
@@ -76,20 +76,9 @@ def incremental_upsert(
     rows (idempotence property test in tests/test_merge.py).
     """
     batch = high_water_mark_filter(new, existing, ts_col)
-    # r12 (pre-committed at r11 close): keep-1 via the min-struct
-    # aggregate — partial-aggregates map-side, so a hot merge key
-    # collapses before the shuffle instead of serializing into one
-    # window task. The struct comparison totalizes the order (ts, then
-    # payload), UPGRADING the window form's arbitrary survivor under
-    # (key, ts) ties to a deterministic one; non-tied survivors are
-    # identical (earliest ts wins, as before). Frames with map-typed
-    # payload keep the window path (maps have no ordering, so the
-    # min-struct form cannot carry them — and the window's survivor
-    # under ties was arbitrary anyway).
-    if any("map<" in f.dataType.simpleString() for f in batch.schema.fields):
-        batch = dedup_row_number(batch, keys, tiebreak=[ts_col])
-    else:
-        batch = dedup_keep_first(batch, keys, tiebreak=[ts_col])
+    # earliest ts per key wins; (key, ts) ties fall to the rest of the
+    # row, so the survivor is deterministic
+    batch = dedup_keep_first(batch, keys, tiebreak=[ts_col])
     return anti_join_merge(batch, existing, keys)
 
 
@@ -110,7 +99,7 @@ def upsert_merge(
 
     Keys must be unique on each side — SQL MERGE raises on multiple
     source matches; this join formulation would instead fan rows out.
-    Deduplicate first (``dedup_row_number``) when uniqueness is not
+    Deduplicate first (``dedup_keep_first``) when uniqueness is not
     guaranteed.
     """
     key_list = list(keys)
@@ -262,7 +251,7 @@ def scd2_apply(
     engine-only equivalent.
 
     Updates must be unique per key (pre-aggregate the snapshot with
-    dedup_row_number first) — same contract as upsert_merge.
+    dedup_keep_first first) — same contract as upsert_merge.
     """
     key_list, tr_list = list(keys), list(tracked)
     hist = dim.filter(~F.col(current_col))
@@ -295,8 +284,7 @@ def scd2_apply(
     )
     # …and first versions for keys the dimension has never seen
     first_versions = (
-        updates.join(dim.select(*key_list).dropDuplicates(key_list),
-                     key_list, "left_anti")
+        anti_join_merge(updates, dim, key_list)
         .select(
             *key_list,
             *tr_list,

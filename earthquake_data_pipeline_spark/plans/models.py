@@ -5,6 +5,10 @@ is a function call; the dependency DAG is Catalyst's lazy logical plan.
 Every model cites its reference SQL. All are pure Column expressions —
 whole-stage codegen end-to-end, no Python workers.
 
+The reference dedups each event twice (Spark clean job, then dbt stg)
+because the steps run in different engines; here they compose into one
+plan, so ``clean_events`` dedups once and stg is a projection.
+
 Presentation order: the 9 analytics models are terminal views whose ORDER BY
 is part of their observable contract (SURVEY §2.7 note) — they return
 sorted DataFrames.
@@ -16,22 +20,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import case_rank, decade_of, severity_of, surrogate_key
-from ..operators.dedup import dedup_row_number
+from ..schemas import EVENT_KEY
 
 ALERT_RANK = {"red": 1, "orange": 2, "yellow": 3, "green": 4}
 SEVERITY_RANK = {"Great": 1, "Major": 2, "Strong": 3, "Moderate": 4, "Light": 5, "Minor": 6}
 
 
 def stg_earthquake(cleaned: DataFrame) -> DataFrame:
-    """Staging model (reference: dbt_files/models/core/stg_earthquake.sql:25-44).
+    """Staging model (reference: dbt_files/models/core/stg_earthquake.sql:30-44).
 
-    Window-dedup on (place, earthquake_datetime) + md5 surrogate key +
-    cast normalization. The incremental branch lives in operators/merge.py
-    (I1); this is the transform applied to whichever slice flows in.
+    md5 surrogate key + cast normalization: a pure projection. Precondition:
+    ``cleaned`` is unique on ``EVENT_KEY``, as ``clean_events`` guarantees
+    (the reference's window dedup at stg_earthquake.sql:25-29 would be a
+    no-op on it). The incremental branch lives in operators/merge.py (I1);
+    this is the transform applied to whichever slice flows in.
     """
-    deduped = dedup_row_number(cleaned, ["place", "earthquake_datetime"])
-    return deduped.select(
-        surrogate_key(["place", "earthquake_datetime"]).alias("event_id"),
+    return cleaned.select(
+        surrogate_key(list(EVENT_KEY)).alias("event_id"),
         "place",
         F.col("earthquake_datetime").cast("timestamp").alias("event_datetime"),
         F.col("magnitude").cast("double").alias("magnitude"),

@@ -96,5 +96,9 @@ MAGNITUDE_RANGE = (-1.0, 10.0)
 LATITUDE_RANGE = (-90.0, 90.0)
 LONGITUDE_RANGE = (-180.0, 180.0)
 DEPTH_FILL = 0.0
-DEFAULT_MIN_DATE = "1500-01-01"
-DEFAULT_MAX_DATE = "2025-07-31"
+EVENT_DATE_RANGE = ("1500-01-01", "2025-07-31")
+
+# The event key: clean_events keeps one row per key, and stg_earthquake's
+# surrogate key hashes it (reference: pipeline/clean_historical.py:48,
+# dbt_files/models/core/stg_earthquake.sql:31).
+EVENT_KEY = ("place", "earthquake_datetime")

@@ -4,7 +4,7 @@ The reference's incremental story is batch-shaped (dbt high-water mark +
 BigQuery MERGE); these are the streaming equivalents, sharing the batch
 operators via foreachBatch:
 
-- ``streaming_dedup``       — I1's window-dedup as a stateful streaming
+- ``streaming_dedup``       — I1's keyed dedup as a stateful streaming
   dedup: watermark bounds the late-data horizon EXPLICITLY (the batch
   `>`-max filter drops late rows silently; the watermark makes the bound a
   declared contract, SURVEY §2.9 I1 caveat).
@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..operators.dedup import dedup_keep_first
 from ..operators.merge import anti_join_merge
 
 
@@ -167,23 +168,6 @@ def streaming_dedup_within_watermark(
     )
 
 
-def _orderable(dt) -> bool:
-    """True iff Spark can ORDER BY a column of this type (r17, ADVICE
-    r16): MapType is non-orderable at any nesting depth (Catalyst's
-    TypeUtils rejects it inside arrays/structs too), as is VariantType.
-    Everything else — atomics, binary, arrays, structs — sorts.
-    """
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.MapType) or type(dt).__name__ == "VariantType":
-        return False
-    if isinstance(dt, T.ArrayType):
-        return _orderable(dt.elementType)
-    if isinstance(dt, T.StructType):
-        return all(_orderable(f.dataType) for f in dt.fields)
-    return True
-
-
 def foreach_batch_merge(
     stream: DataFrame,
     target_path: str,
@@ -207,21 +191,17 @@ def foreach_batch_merge(
     duplicate keys carry DIVERGENT payloads (the transport's normal
     retry shape — same event, seconds-later retry timestamp), the row
     with the SMALLEST payload tuple in column order survives
-    (row_number over the keys ordered by every non-key column,
-    nulls-first). A keep-any dropDuplicates would let the surviving
-    payload vary across runs and partitionings, breaking the repo's
-    bit-reproducibility discipline even though the keys match. Note
-    the cross-batch contract is unchanged and REMAINS arrival-order
-    (first batch to insert a key wins — the anti-join); determinism
-    here is within one micro-batch, which is exactly the scope replay
-    re-randomizes. Cost: the same single hash exchange on the merge
-    keys, plus an in-partition sort of duplicate groups (~1 row each).
+    (``dedup_keep_first(batch, keys)``: ascending, nulls first). A
+    keep-any dropDuplicates would let the surviving payload vary across
+    runs and partitionings, breaking the repo's bit-reproducibility
+    discipline even though the keys match. Note the cross-batch
+    contract is unchanged and REMAINS arrival-order (first batch to
+    insert a key wins — the anti-join); determinism here is within one
+    micro-batch, which is exactly the scope replay re-randomizes. Cost:
+    one hash exchange on the merge keys, combined map-side; no sort.
 
     Non-orderable payload columns (MapType anywhere in the type tree,
-    VariantType) cannot feed an ORDER BY — Spark raises
-    AnalysisException on the whole micro-batch (r17, ADVICE r16; the
-    r16 version ordered by every payload column and so broke any
-    stream carrying a map). They tie-break through ``to_json`` instead:
+    VariantType) tie-break through ``to_json`` (r17, ADVICE r16):
     deterministic for a given row's binary layout, which is exactly
     the replay-re-randomization scope this pick has to pin.
     """
@@ -233,29 +213,9 @@ def foreach_batch_merge(
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
         from pyspark.errors import AnalysisException
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
 
         spark = batch.sparkSession
-        payload = [f for f in batch.schema.fields if f.name not in set(keys)]
-        if payload:
-            w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
-                *[
-                    (
-                        F.col(f.name)
-                        if _orderable(f.dataType)
-                        else F.to_json(F.col(f.name))
-                    ).asc_nulls_first()
-                    for f in payload
-                ]
-            )
-            batch = (
-                batch.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        else:  # keys-only frame: duplicates are bit-identical
-            batch = batch.dropDuplicates(list(keys))
+        batch = dedup_keep_first(batch, keys)
         try:
             existing = spark.read.parquet(target_path)
         except AnalysisException as e:

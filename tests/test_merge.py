@@ -401,18 +401,40 @@ def test_dedup_keep_first_handles_dotted_column_names(spark):
     assert out == [(1, 7, "x"), (2, 5, "z")]
 
 
-def test_dedup_keep_first_rejects_map_columns(spark):
-    """ADVICE r11: map payload cannot ride in the min() comparison
-    struct — the error must be a clear TypeError at plan time, not an
-    opaque analysis failure."""
-    import pytest
+def test_dedup_keep_first_carries_map_and_variant_payloads(spark):
+    """Map and variant columns have no ordering, yet ride through the
+    one keep-one dedup: they enter the ordering struct as to_json, while
+    orderable columns keep their native order (v=2.0 < v=10.0, not the
+    string order "10.0" < "2.0"). Ties on every orderable column fall to
+    the to_json text of the map, then of the variant."""
+    from pyspark.sql import functions as F
 
     from earthquake_data_pipeline_spark.operators.dedup import (
         dedup_keep_first,
     )
 
     df = spark.createDataFrame(
-        [("k", 1, {"a": 1})], "k string, v int, m map<string,int>"
+        [
+            ("a", 10.0, '{"r": "0"}', '{"r": 0}'),
+            ("a", 2.0, '{"r": "9"}', '{"r": 9}'),
+            ("b", 1.0, '{"r": "2"}', '{"r": 0}'),
+            ("b", 1.0, '{"r": "1"}', '{"r": 5}'),
+            ("c", 1.0, '{"r": "1"}', '{"r": 7}'),
+            ("c", 1.0, '{"r": "1"}', '{"r": 3}'),
+        ],
+        "k string, v double, jm string, jv string",
+    ).select(
+        "k",
+        "v",
+        F.from_json("jm", "map<string,string>").alias("m"),
+        F.parse_json("jv").alias("p"),
     )
-    with pytest.raises(TypeError, match="map"):
-        dedup_keep_first(df, ["k"], tiebreak=["v"])
+    for tiebreak in ([], ["v"]):
+        out = dedup_keep_first(df, ["k"], tiebreak=tiebreak).select(
+            "k", "v", F.to_json("m").alias("m"), F.to_json("p").alias("p")
+        )
+        assert sorted(tuple(r) for r in out.collect()) == [
+            ("a", 2.0, '{"r":"9"}', '{"r":9}'),
+            ("b", 1.0, '{"r":"1"}', '{"r":5}'),
+            ("c", 1.0, '{"r":"1"}', '{"r":3}'),
+        ]

@@ -313,3 +313,65 @@ def test_prefix_candidates_shingle_frame_materializes_once(spark):
         plan = frame._jdf.queryExecution().optimizedPlan().toString()
         assert "LogicalRDD" in plan  # the reuse() checkpoint
         assert "split(" not in plan
+
+
+def _load_and_month_facts(spark):
+    # the pipeline's write path: raw -> enrich -> clean -> stg -> fact,
+    # once for the historical load and once for a later month
+    from earthquake_data_pipeline_spark.driver_queries import (
+        GEO_COUNTRY_LOOKUP,
+        GEO_POLYGONS,
+    )
+    from earthquake_data_pipeline_spark.operators.cleaning import clean_events
+    from earthquake_data_pipeline_spark.operators.enrichment import enrich_events
+    from earthquake_data_pipeline_spark.plans.models import (
+        fact_earthquake_data,
+        stg_earthquake,
+    )
+    from earthquake_data_pipeline_spark.schemas import RAW_EVENT_SCHEMA
+
+    def fact(ms):
+        raw = spark.createDataFrame(
+            [
+                ("10 km N of Eastland", ms, 4.5, 10.0, 50.0, 5.0, None, 0, None, "earthquake"),
+                ("10 km N of Eastland", ms, 4.5, 10.0, 50.0, 5.0, None, 0, None, "earthquake"),
+                ("off Westland", ms + 1, 5.1, -10.0, -60.0, None, "green", 1, None, "earthquake"),
+            ],
+            RAW_EVENT_SCHEMA,
+        )
+        enriched = enrich_events(raw, GEO_POLYGONS, GEO_COUNTRY_LOOKUP)
+        return fact_earthquake_data(stg_earthquake(clean_events(enriched)))
+
+    return fact(1_600_000_000_000), fact(1_700_000_000_000)
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_load_fact_plan_dedups_once(spark):
+    # clean_events' dedup is the plan's one shuffle; stg is a projection
+    # and adds no second (window) dedup on the same key
+    load, _ = _load_and_month_facts(spark)
+    plan = _executed(load)
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "Window" not in plan
+
+
+def test_month_upsert_plan_two_hash_exchanges(spark, tmp_path):
+    # the month's upsert: clean_events' dedup and incremental_upsert's
+    # keep-one aggregate on event_id; the anti-join's build side is a
+    # plain event_id scan (no distinct), and nothing runs a window
+    from earthquake_data_pipeline_spark.operators.merge import incremental_upsert
+    from earthquake_data_pipeline_spark.sources import txnlog
+
+    load, month = _load_and_month_facts(spark)
+    table = str(tmp_path / "fact")
+    txnlog.commit_overwrite(load, table)
+    snap = txnlog.read_snapshot(spark, table)
+    upsert = incremental_upsert(month, snap, ["event_id"], "event_datetime")
+    plan = _executed(upsert)
+    assert plan.count("Exchange hashpartitioning") == 2
+    assert "Window" not in plan
+    assert "LeftAnti" in plan
+    assert upsert.count() == 2

@@ -861,32 +861,38 @@ def test_session_ids_presplit_null_ts_and_null_user(spark):
     assert a == b and len(b) == 5
 
 
-def test_incremental_upsert_accepts_map_payload(spark):
+@pytest.mark.parametrize("payload", ["map", "variant"])
+def test_incremental_upsert_accepts_map_payload(spark, payload):
     """r12 self-review finding: the dedup_keep_first migration must not
-    break map-payload frames that the window path carried fine — they
-    fall back to dedup_row_number."""
+    break frames whose payload has no ordering — a map or a variant
+    rides through the keep-one dedup (it orders them by to_json)."""
     from datetime import datetime
 
     from earthquake_data_pipeline_spark.operators.merge import (
         incremental_upsert,
     )
 
-    new = spark.createDataFrame(
+    def frame(rows):
+        df = spark.createDataFrame(rows, "k string, ts timestamp, j string")
+        props = (
+            F.from_json("j", "map<string,string>")
+            if payload == "map"
+            else F.parse_json("j")
+        )
+        return df.select("k", "ts", props.alias("props"))
+
+    new = frame(
         [
-            ("a", datetime(2024, 1, 2), {"x": "1"}),
-            ("a", datetime(2024, 1, 3), {"x": "2"}),
-            ("b", datetime(2024, 1, 2), {"y": "9"}),
-        ],
-        "k string, ts timestamp, props map<string,string>",
+            ("a", datetime(2024, 1, 2), '{"x": "1"}'),
+            ("a", datetime(2024, 1, 3), '{"x": "2"}'),
+            ("b", datetime(2024, 1, 2), '{"y": "9"}'),
+        ]
     )
-    existing = spark.createDataFrame(
-        [("b", datetime(2024, 1, 1), {"y": "0"})],
-        "k string, ts timestamp, props map<string,string>",
-    )
-    out = {r["k"]: r for r in incremental_upsert(new, existing, ["k"], "ts").collect()}
-    # b exists -> anti-joined away; a deduped to earliest ts
-    assert list(out) == ["a"]
-    assert out["a"]["ts"] == datetime(2024, 1, 2)
+    existing = frame([("b", datetime(2024, 1, 1), '{"y": "0"}')])
+    out = incremental_upsert(new, existing, ["k"], "ts")
+    rows = out.select("k", "ts", F.to_json("props").alias("p")).collect()
+    # b exists -> anti-joined away; a deduped to earliest ts, payload intact
+    assert [tuple(r) for r in rows] == [("a", datetime(2024, 1, 2), '{"x":"1"}')]
 
 
 def test_percentile_cont_bracket_matches_exact_percentile(spark):

@@ -155,9 +155,7 @@ def test_orderable_type_predicate():
     sortable composites."""
     from pyspark.sql import types as T
 
-    from earthquake_data_pipeline_spark.streaming.incremental import (
-        _orderable,
-    )
+    from earthquake_data_pipeline_spark.operators.dedup import _orderable
 
     m = T.MapType(T.StringType(), T.LongType())
     assert not _orderable(m)
@@ -165,6 +163,8 @@ def test_orderable_type_predicate():
     assert not _orderable(
         T.StructType([T.StructField("inner", m)])
     )
+    assert not _orderable(T.VariantType())
+    assert not _orderable(T.ArrayType(T.VariantType()))
     assert _orderable(T.ArrayType(T.LongType()))
     assert _orderable(T.StructType([T.StructField("s", T.StringType())]))
     assert _orderable(T.BinaryType())
